@@ -18,21 +18,40 @@ import scala.collection.mutable.ArrayBuffer
   *     wordCount >= MinWords; short low-link blocks (headlines) are
   *     kept when adjacent to a content block (one smoothing pass);
   *  5. output = content block texts joined with '\n'.
+  *
+  * Production calls (`extractText`, `extractWithStats`) run the
+  * one-pass `Segmenter`; `segment` over a `TagTree` plus `classify` is
+  * the reference form of the same rule.
   */
 object MainContent {
 
   final val MinWords = 3
   final val MaxLinkDensity = 0.33
 
-  private val skipElems = Set("script", "style", "noscript", "template", "head")
-  private val blockElems = Set("p", "div", "h1", "h2", "h3", "h4", "h5", "h6",
+  private[extract] val skipElems = Set("script", "style", "noscript", "template", "head")
+  private[extract] val blockElems = Set("p", "div", "h1", "h2", "h3", "h4", "h5", "h6",
     "li", "td", "th", "blockquote", "pre", "article", "section", "main",
     "header", "footer", "nav", "aside", "ul", "ol", "table", "tr", "body",
     "html", "figure", "figcaption", "dd", "dt", "dl", "form", "fieldset",
     "address", "center")
 
   final case class Block(text: String, words: Int, linkWords: Int) {
-    def linkDensity: Double = if (words == 0) 0.0 else linkWords.toDouble / words
+    def linkDensity: Double = MainContent.linkDensity(words, linkWords)
+  }
+
+  private def linkDensity(words: Int, linkWords: Int): Double =
+    if (words == 0) 0.0 else linkWords.toDouble / words
+
+  /** The keep rule over per-block counts: block `i` of `n` is kept when
+    * it is content (link density <= MaxLinkDensity and at least MinWords
+    * words), or when it is low-link and next to a content block (one
+    * smoothing pass).
+    */
+  private[extract] def kept(i: Int, n: Int, words: Array[Int], linkWords: Array[Int]): Boolean = {
+    def lowLink(k: Int) = linkDensity(words(k), linkWords(k)) <= MaxLinkDensity
+    def content(k: Int) = lowLink(k) && words(k) >= MinWords
+    lowLink(i) && (words(i) >= MinWords ||
+      (i > 0 && content(i - 1)) || (i + 1 < n && content(i + 1)))
   }
 
   /** Segment a parsed tree into text blocks in document order. */
@@ -92,62 +111,19 @@ object MainContent {
   }
 
   def classify(blocks: IndexedSeq[Block]): Array[Boolean] = {
-    val base = blocks.map(b => b.linkDensity <= MaxLinkDensity && b.words >= MinWords).toArray
-    // smoothing: short low-link blocks adjacent to content are kept
-    val out = base.clone()
-    var i = 0
-    while (i < base.length) {
-      if (!base(i) && blocks(i).linkDensity <= MaxLinkDensity) {
-        val prevC = i > 0 && base(i - 1)
-        val nextC = i + 1 < base.length && base(i + 1)
-        if (prevC || nextC) out(i) = true
-      }
-      i += 1
-    }
-    out
+    val words = blocks.map(_.words).toArray
+    val linkWords = blocks.map(_.linkWords).toArray
+    Array.tabulate(blocks.length)(kept(_, blocks.length, words, linkWords))
   }
 
   /** Full pipeline: decoded html string → extracted main text. */
-  def extractText(html: String): String = {
-    val tree = TagTree.parse(html)
-    val blocks = segment(tree)
-    val keep = classify(blocks)
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    var first = true
-    while (i < blocks.length) {
-      if (keep(i)) {
-        if (!first) sb.append('\n')
-        sb.append(blocks(i).text)
-        first = false
-      }
-      i += 1
-    }
-    sb.toString
-  }
+  def extractText(html: String): String = extractWithStats(html)._1
 
   /** Extraction metrics for the lineage/metrics sink. */
   final case class ExtractStats(blocks: Int, contentBlocks: Int,
                                 htmlChars: Int, textChars: Int)
 
-  def extractWithStats(html: String): (String, ExtractStats) = {
-    val tree = TagTree.parse(html)
-    val blocks = segment(tree)
-    val keep = classify(blocks)
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    var first = true
-    var kept = 0
-    while (i < blocks.length) {
-      if (keep(i)) {
-        if (!first) sb.append('\n')
-        sb.append(blocks(i).text)
-        first = false
-        kept += 1
-      }
-      i += 1
-    }
-    val text = sb.toString
-    (text, ExtractStats(blocks.length, kept, html.length, text.length))
-  }
+  private val segmenters = ThreadLocal.withInitial[Segmenter](() => new Segmenter)
+
+  def extractWithStats(html: String): (String, ExtractStats) = segmenters.get().extract(html)
 }

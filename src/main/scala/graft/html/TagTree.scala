@@ -127,7 +127,7 @@ object TagTree {
   final val KText: Byte = 1
   final val KComment: Byte = 2
 
-  private val voidElems = Set("area", "base", "br", "col", "embed", "hr",
+  private[graft] val voidElems = Set("area", "base", "br", "col", "embed", "hr",
     "img", "input", "link", "meta", "param", "source", "track", "wbr")
 
   /** Growable primitive/ref arrays — no per-element boxing (the parse

