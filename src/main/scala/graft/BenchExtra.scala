@@ -19,73 +19,8 @@ object BenchExtra {
     * driver, never oracle-compared).
     */
   private val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // q1_agg without the Par.spread: partial agg rides the single-split
-    // scan, only ~6 partial rows cross the exchange (guide §2.3)
-    "x_q1_nospread" -> ((s, d) =>
-      s.read.parquet(s"$d/lineitem.parquet")
-        .groupBy(F.col("l_returnflag"), F.col("l_linestatus"))
-        .agg(
-          F.sum(F.col("l_quantity")).cast("double").as("sum_qty"),
-          F.round(F.sum(F.col("l_extendedprice")), 2).as("sum_base_price"),
-          F.round(F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2)
-            .as("sum_disc_price"),
-          F.count(F.lit(1)).as("count_order"))),
-    // q_kmeans with per-iteration centroid materialization (k rows to
-    // the driver, re-injected as a LocalRelation — the MLlib shape):
-    // shallow plans per round instead of one deep lazy tree
-    "x_kmeans_mat" -> ((s, d) => {
-      import graft.functions.VectorFunctions.vec_dot
-      val k = 16; val iters = 2
-      val e = s.read.parquet(s"$d/embeddings.parquet")
-      val stride = math.max(1L, e.count() / k)
-      val withN = e.select(F.col("vec_id"), F.col("embedding"),
-        F.sqrt(vec_dot(F.col("embedding"), F.col("embedding"))).as("en"))
-      def assigned(cents: DataFrame): DataFrame = {
-        val cc = cents.select(F.col("cent_id"), F.col("cvec"),
-          F.sqrt(vec_dot(F.col("cvec"), F.col("cvec"))).as("cn"))
-        withN.crossJoin(F.broadcast(cc))
-          .withColumn("ccos",
-            F.round(vec_dot(F.col("embedding"), F.col("cvec")) / (F.col("en") * F.col("cn")), 6))
-          .groupBy(F.col("vec_id"))
-          .agg(F.max(F.struct(F.col("ccos"), (-F.col("cent_id")).as("nc"))).as("best"),
-            F.first(F.col("embedding")).as("embedding"))
-          .select(F.col("vec_id"), F.col("embedding"),
-            (-F.col("best.nc")).cast("long").as("cent_id"), F.col("best.ccos").as("ccos"))
-      }
-      var cents: DataFrame = e.filter(F.col("vec_id") % stride === 0)
-        .select(F.col("vec_id").as("cent_id"),
-          F.transform(F.col("embedding"), x => x.cast("double")).as("cvec"))
-      for (_ <- 1 to iters) {
-        val next = assigned(cents)
-          .select(F.col("cent_id"), F.posexplode(F.col("embedding")).as(Seq("p", "v")))
-          .groupBy(F.col("cent_id"), F.col("p"))
-          .agg(F.round(
-            F.sum(F.round(F.col("v").cast("double"), 7).cast("decimal(18,10)")).cast("double")
-              / F.count(F.lit(1)), 6).as("m"))
-          .groupBy(F.col("cent_id"))
-          .agg(F.transform(F.array_sort(F.collect_list(F.struct(F.col("p"), F.col("m")))),
-            st => st.getField("m")).as("cvec"))
-        val rows = java.util.Arrays.asList(next.collect(): _*)
-        cents = s.createDataFrame(rows, next.schema)
-      }
-      assigned(cents).select(F.col("vec_id"), F.col("cent_id"), F.col("ccos"))
-    }),
-    // q_kmeans executed eagerly under scoped AQE-off (the CC-loop
-    // pattern: fixed-iteration ML loop, per-round tables are
-    // k-centroid-scale, shuffle width already the session's) — the
-    // localCheckpoint materializes inside the timed region; the
-    // returned DF counts cached blocks
-    "x_kmeans_noaqe_ckpt" -> ((s, d) => {
-      val prev = s.conf.get("spark.sql.adaptive.enabled")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      try graft.ops.SimilarityOps.kmeansAssign(s, d).localCheckpoint()
-      finally s.conf.set("spark.sql.adaptive.enabled", prev)
-    }),
-    // control: the same eager localCheckpoint with AQE left on —
-    // isolates the AQE-stage-job share from the checkpoint share
-    "x_kmeans_ckpt" -> ((s, d) =>
-      graft.ops.SimilarityOps.kmeansAssign(s, d).localCheckpoint()),
-    // q_decontaminate without either spread
+    // q_decontaminate without either spread: the A/B for its open
+    // 0.90x regression (ROADMAP)
     "x_decontam_nospread" -> ((s, d) => {
       val k = 5
       def wordGrams(ws: org.apache.spark.sql.Column, text: org.apache.spark.sql.Column) = {
@@ -105,58 +40,6 @@ object BenchExtra {
         .join(F.broadcast(bench), Seq("gram"))
         .groupBy(F.col("doc_id"))
         .agg(F.countDistinct(F.col("gram")).as("n_shared"))
-    }),
-    // q_summary_counts without the spread
-    "x_summary_nospread" -> ((s, d) => {
-      val li = s.read.parquet(s"$d/lineitem.parquet")
-      val o = s.read.parquet(s"$d/orders.parquet")
-      val c = s.read.parquet(s"$d/customer.parquet")
-      val p = s.read.parquet(s"$d/part.parquet")
-      li.agg(
-        F.countDistinct(F.col("l_orderkey")).as("n_orders_ref"),
-        F.countDistinct(F.col("l_partkey")).as("n_parts_ref"),
-        F.count(F.lit(1)).as("n_lineitems"))
-        .crossJoin(o.agg(F.countDistinct(F.col("o_custkey")).as("n_customers_ref")))
-        .crossJoin(c.agg(F.count(F.lit(1)).as("n_customers")))
-        .crossJoin(p.agg(F.count(F.lit(1)).as("n_parts")))
-        .select("n_orders_ref", "n_parts_ref", "n_lineitems", "n_customers_ref",
-          "n_customers", "n_parts")
-    }),
-    // q_dup_id_check without the spread
-    "x_dupid_nospread" -> ((s, d) =>
-      s.read.parquet(s"$d/lineitem.parquet")
-        .groupBy(F.col("l_orderkey"))
-        .agg(F.count(F.lit(1)).as("cnt"))
-        .filter(F.col("cnt") > 1)),
-    // q_lookup_cascade without the spread
-    "x_lookup_nospread" -> ((s, d) => {
-      val ev = s.read.parquet(s"$d/events.parquet")
-      val cust = s.read.parquet(s"$d/customer.parquet")
-        .select(F.col("c_custkey").as("key"), F.col("c_name").as("cust_name"))
-      val supp = s.read.parquet(s"$d/supplier.parquet")
-        .select(F.col("s_suppkey").as("skey"), F.col("s_name").as("supp_name"))
-      ev.join(F.broadcast(cust), ev("user_id") === cust("key"), "left")
-        .join(F.broadcast(supp), ev("user_id") === supp("skey"), "left")
-        .select(F.col("event_id"),
-          F.coalesce(F.col("cust_name"), F.col("supp_name"), F.lit("unresolved"))
-            .as("resolved_name"),
-          F.when(F.col("cust_name").isNotNull, "customer")
-            .when(F.col("supp_name").isNotNull, "supplier")
-            .otherwise("none").as("match_source"))
-    }),
-    // q_join_agg without the probe-side spread
-    "x_joinagg_nospread" -> ((s, d) => {
-      val li = s.read.parquet(s"$d/lineitem.parquet")
-      val o = s.read.parquet(s"$d/orders.parquet")
-      val c = s.read.parquet(s"$d/customer.parquet")
-      val n = s.read.parquet(s"$d/nation.parquet")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(F.broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(F.broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy(F.col("n_name"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))), 2)
-          .as("revenue"),
-          F.count(F.lit(1)).as("n_items"))
     })
   )
 
@@ -165,7 +48,6 @@ object BenchExtra {
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").toSeq
     val reps = if (args.length > 1) args(1).toInt else 5
-    val showJobs = args.contains("-jobs")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -174,42 +56,16 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    @volatile var t0 = 0L
-    @volatile var record = false
-    val events = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    if (showJobs) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          events.synchronized { if (record)
-            events += ((s"start ${j.jobId}", (System.nanoTime() - t0) / 1e9)) }
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          events.synchronized { if (record)
-            events += ((s"end   ${j.jobId}", (System.nanoTime() - t0) / 1e9)) }
-      })
-    names.filter(_ != "-jobs").foreach { rawName =>
-      // "off:<query>" runs the declared query with Par.spread disabled
-      // (the A/B harness for the spread family)
-      val parOff = rawName.startsWith("off:")
-      val name = if (parOff) rawName.stripPrefix("off:") else rawName
-      if (parOff) sys.props("graft.par.off") = "1" else sys.props -= "graft.par.off"
+    names.foreach { name =>
       val fn = variants.getOrElse(name, SparkEntry.queries(name))
       val walls = (1 to reps).map { i =>
-        record = showJobs && i == reps
-        t0 = System.nanoTime()
+        val t0 = System.nanoTime()
         val rows = fn(spark, sfDir).count()
         val w = (System.nanoTime() - t0) / 1e9
-        println(f"XBENCH $rawName rep$i $w%.3f s rows=$rows")
+        println(f"XBENCH $name rep$i $w%.3f s rows=$rows")
         w
       }
-      record = false
-      println(f"XBENCH $rawName min ${walls.min}%.3f s")
-      if (showJobs) {
-        Thread.sleep(200)
-        events.synchronized {
-          events.foreach { case (e, t) => println(f"XJOB $name $e at $t%.3f s") }
-          events.clear()
-        }
-      }
+      println(f"XBENCH $name min ${walls.min}%.3f s")
     }
     spark.stop()
   }

@@ -84,47 +84,12 @@ object DedupScaleBench {
       .selectExpr("sum(length(text))").collect()
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // GRAFT_SCALE_PROF=1: per-stage task stats for the LAST rep of each
-    // op (count, sum, max, median task seconds + GC share) — separates
-    // "skewed stage" from "uniformly bandwidth-bound stage" when a leg's
-    // N→4N efficiency sits under the shuffle-floor control's.
-    val prof = sys.env.get("GRAFT_SCALE_PROF").contains("1")
-    val stageStats = new java.util.concurrent.ConcurrentHashMap[
-      Int, scala.collection.mutable.ArrayBuffer[(Double, Double)]]()
-    @volatile var record = false
-    if (prof) spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (record && t.taskMetrics != null) {
-            val buf = stageStats.computeIfAbsent(t.stageId,
-              _ => scala.collection.mutable.ArrayBuffer.empty)
-            buf.synchronized {
-              buf += ((t.taskMetrics.executorRunTime / 1e3,
-                t.taskMetrics.jvmGCTime / 1e3))
-            }
-          }
-      })
-    def dumpProf(op: String): Unit = if (prof) {
-      stageStats.forEach { (sid, buf) =>
-        val d = buf.map(_._1).sorted
-        val gc = buf.map(_._2).sum
-        println(f"PROFSTAGE $op stage=$sid tasks=${d.size} " +
-          f"sum=${d.sum}%.1f max=${d.last}%.2f med=${d(d.size / 2)}%.2f " +
-          f"gc_sum=$gc%.1f")
-      }
-      stageStats.clear()
-    }
-    def time(job: () => Unit): Double = {
-      val walls = (1 to reps).map { i =>
-        record = prof && i == reps
+    def time(job: () => Unit): Double =
+      (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         job()
         (System.nanoTime() - t0) / 1e9
-      }
-      record = false
-      walls.min
-    }
+      }.min
     // materialize via an aggregate that survives column pruning: the
     // digest length forces the per-doc REBUILD + md5 (the op's whole
     // point), the count column forces the first-wins aggregation path
@@ -137,9 +102,7 @@ object DedupScaleBench {
     drain(graft.ops.DedupOps.paraDedup(spark, dir), "n_kept")
 
     val spanWall = time(() => drain(graft.ops.DedupOps.spanDedup(spark, dir), "n_removed"))
-    dumpProf("span")
     val paraWall = time(() => drain(graft.ops.DedupOps.paraDedup(spark, dir), "n_kept"))
-    dumpProf("para")
     val spanRate = nDocs / spanWall
     val paraRate = nDocs / paraWall
     println(f"""{"bench":"dedup_scale","cpus":$cpus,"docs":$nDocs,"span_wall_s":$spanWall%.2f,"span_docs_per_s":$spanRate%.0f,"para_wall_s":$paraWall%.2f,"para_docs_per_s":$paraRate%.0f,"reps":$reps}""")

@@ -381,17 +381,14 @@ object MstrJoinPipeline {
     * (stage F's stats accumulate a little KFact across metric-dominated
     * levels). The request frag's `report_id` slot carries the target
     * file, so this rides the probe's existing pass with no payload
-    * deserialization and no extra job. `trackFiles=false` (the measured
-    * detector's disable levers) skips the sketches entirely so an A/B
-    * "before" leg carries none of the detector's cost.
+    * deserialization and no extra job.
     */
-  final class ProbeStats(val cap: Int, val trackFiles: Boolean = true)
-      extends Serializable {
+  final class ProbeStats(val cap: Int) extends Serializable {
     var kinds: Map[Int, Long] = Map.empty
     val files = new java.util.HashMap[Int, HeavyHitters]()
     def add(f: Frag): this.type = {
       kinds = kinds.updated(f.kind, kinds.getOrElse(f.kind, 0L) + 1L)
-      if (trackFiles && f.kind != Frag.KFrag && f.report_id.nonEmpty)
+      if (f.kind != Frag.KFrag && f.report_id.nonEmpty)
         files.computeIfAbsent(f.kind, _ => new HeavyHitters(cap)).add(f.report_id)
       this
     }
@@ -632,14 +629,6 @@ object MstrJoinPipeline {
     val loc = MstrLocale.forLang(lang)
     val indexFiles: Set[String] = indexFileSet(loc)
 
-    // driver-side stage timing, enabled by GRAFT_JOIN_PROF=1
-    val profT0 = System.nanoTime()
-    val prof: String => Unit =
-      if (sys.env.get("GRAFT_JOIN_PROF").contains("1"))
-        tag => System.err.println(
-          f"JOINPROF $tag at ${(System.nanoTime() - profT0) / 1e9}%.2f s")
-      else _ => ()
-
     // the driver parses the indexes once for PLANNING (the documento
     // work list + selection); executors get the RAW index html instead:
     // strings java-serialize ~20× faster than the parsed half-million
@@ -653,7 +642,6 @@ object MstrJoinPipeline {
     val handle = new IndexHandle(indexHtml, lang)
     val indexes = handle.indexes
     val bIdx = spark.sparkContext.broadcast(handle)
-    prof("indexes-built")
 
     // The staged passes run on the RDD layer deliberately: every stage
     // is per-partition imperative logic over OPAQUE java-serialized
@@ -725,30 +713,21 @@ object MstrJoinPipeline {
     //    the key slot, the probe heavy-hitter-counts them per file
     //    (ProbeStats), and the consuming stage salts the measured-hot
     //    files exactly like the planning-time ones.
-    // GRAFT_JOIN_NOSALT=1 disables all routing; GRAFT_JOIN_STATIC_HOT=1
-    // disables only the measured detector (the A/B levers).
-    val noSalt = sys.env.get("GRAFT_JOIN_NOSALT").contains("1")
-    val staticHotOnly = sys.env.get("GRAFT_JOIN_STATIC_HOT").contains("1")
-    val hotFiles: Map[String, Int] =
-      if (noSalt) Map.empty
-      else hotFilesOf(
-        Seq(indexes.documento, indexes.relatorio, indexes.cuboInteligente,
-          indexes.atalho, indexes.metrica, indexes.fato, indexes.funcao,
-          indexes.atributo, indexes.tabelaLogica, indexes.pasta)
-          .map(_.links.iterator.map(_.file)) :+
-          reportReqs.iterator.map(_.file),
-        width)
+    val hotFiles: Map[String, Int] = hotFilesOf(
+      Seq(indexes.documento, indexes.relatorio, indexes.cuboInteligente,
+        indexes.atalho, indexes.metrica, indexes.fato, indexes.funcao,
+        indexes.atributo, indexes.tabelaLogica, indexes.pasta)
+        .map(_.links.iterator.map(_.file)) :+
+        reportReqs.iterator.map(_.file),
+      width)
     /** Measured-hot (file → salt count) for a stage consuming
-      * `reqKinds` requests from a probed predecessor; empty under
-      * either disable lever.
+      * `reqKinds` requests from a probed predecessor.
       */
-    def measuredHot(stats: ProbeStats, reqKinds: Int*): Map[String, Int] =
-      if (noSalt || staticHotOnly) Map.empty
-      else {
-        val hot = stats.hotFiles(reqKinds, width)
-        if (hot.nonEmpty) lastMeasuredHot.updateAndGet(_ ++ hot.keySet)
-        hot
-      }
+    def measuredHot(stats: ProbeStats, reqKinds: Int*): Map[String, Int] = {
+      val hot = stats.hotFiles(reqKinds, width)
+      if (hot.nonEmpty) lastMeasuredHot.updateAndGet(_ ++ hot.keySet)
+      hot
+    }
     // hot pages replicated once per ADAPTIVE salt under the salted
     // partitioner; tiny — Σ per-file salt counts rows. Layouts cache by
     // hot-file KEY SET with a per-file high-water salt count: salts
@@ -868,10 +847,9 @@ object MstrJoinPipeline {
     // under threshold/16 (see HeavyHitters), and each per-kind map
     // under 2×cap entries regardless of distinct-file count
     val hhCap = math.max(64, 8 * width)
-    val trackHot = !(noSalt || staticHotOnly)
     lastMeasuredHot.set(Set.empty)
     def probe(out: RDD[Frag]): ProbeStats = out
-      .aggregate(new ProbeStats(hhCap, trackHot))(
+      .aggregate(new ProbeStats(hhCap))(
         (s, f) => s.add(f), (a, b) => a.merge(b))
 
     def reqRdd[R: ClassTag](out: RDD[Frag], kind: Int): RDD[(String, R)] =
@@ -926,7 +904,6 @@ object MstrJoinPipeline {
     // the pages layout shuffle, reused by every later stage); dataset
     // requests stay distributed
     val rStats = probe(rOut)
-    prof(s"stage-R done (${rStats.count(Frag.KDs)} ds reqs)")
     val dsReqRdd = reqRdd[DsReq](rOut, Frag.KDs)
 
     // ---- stage D: dataset pages → template objects → attr/metric reqs ----
@@ -974,7 +951,6 @@ object MstrJoinPipeline {
     // frontier (attribute + first-level metric requests ride together)
     val dStats = probe(dOut)
     val nL1 = dStats.count(Frag.KAttr) + dStats.count(Frag.KMetric)
-    prof(s"stage-D done ($nL1 l1 reqs)")
 
     // ---- stage A body: attribute pages → forms (attribute_extractor.py);
     // fused into the first level pass so attribute and metric pages are
@@ -1078,7 +1054,7 @@ object MstrJoinPipeline {
     var frontierStats: ProbeStats = dStats
     // fact requests from every level union into one stage-F input, so
     // its hot set accumulates across all the level probes
-    val factStats = new ProbeStats(hhCap, trackHot)
+    val factStats = new ProbeStats(hhCap)
     var mnodeFrags = spark.sparkContext.emptyRDD[Frag]
     var factReqRdd: RDD[(String, FactReq)] =
       spark.sparkContext.emptyRDD[(String, FactReq)]
@@ -1090,8 +1066,6 @@ object MstrJoinPipeline {
         measuredHot(frontierStats, Frag.KAttr, Frag.KMetric))(fusedStage).persist(sl)
       persisted += out
       val stats = probe(out)
-      prof(s"level $depth done (${stats.count(Frag.KMetric) +
-        stats.count(Frag.KFact)} follow-ups)")
       mnodeFrags = mnodeFrags.union(out)
       factReqRdd = factReqRdd.union(reqRdd[FactReq](out, Frag.KFact))
       frontier = reqRdd[MetricReq](out, Frag.KMetric)
@@ -1166,20 +1140,8 @@ object MstrJoinPipeline {
       }
     }
     // materialize eagerly; callers get the cached result
-    prof("assembly planned")
-    if (sys.env.get("GRAFT_JOIN_PROF").contains("1")) {
-      // prof-only sub-splits of the assembly job (extra jobs, so gated);
-      // the prof persists ride the same end-of-run cleanup as the
-      // stage caches
-      persisted += factFrags.persist()
-      prof(s"  factFrags: ${factFrags.count()} rows")
-      persisted += allFrags.persist()
-      prof(s"  allFrags: ${allFrags.count()} rows")
-      prof(s"  assembled rdd: ${assembled.count()} rows")
-    }
     val result = spark.createDataset(assembled.map(project))(enc).persist(sl)
     result.count()
-    prof("assembly done")
     // the intermediate caches served their purpose during assembly —
     // release them (and the pages layout + executor copies of the index
     // broadcast) so repeated run() calls don't pin blocks for the

@@ -19,10 +19,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * index-visible; `fanin` points every report at ONE shared cube
   * section so the skew is request-traffic-only and invisible to
   * planning-time link counts; `even` is the control), MSTR_HOT=0 is a
-  * legacy alias for MSTR_SHAPE=even, GRAFT_JOIN_NOSALT=1 disables all
-  * salted request routing and GRAFT_JOIN_STATIC_HOT=1 disables only
-  * the measured (probe-counted) hot detection (the before/after
-  * comparison levers).
+  * legacy alias for MSTR_SHAPE=even.
   */
 object MstrHotSkewBench {
   def main(args: Array[String]): Unit = {
@@ -48,8 +45,7 @@ object MstrHotSkewBench {
     println(s"PROF corpus: n=$n reports, ${pages.size} pages, " +
       s"${pages.map(_.html.length.toLong).sum / 1024} KiB total, " +
       s"largest file ${maxFile.url} = ${maxFile.html.length / 1024} KiB, " +
-      s"cores=$cores shape=$shape nosalt=${sys.env.getOrElse("GRAFT_JOIN_NOSALT", "0")} " +
-      s"statichot=${sys.env.getOrElse("GRAFT_JOIN_STATIC_HOT", "0")}")
+      s"cores=$cores shape=$shape")
 
     val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     spark.sparkContext.addSparkListener(new SparkListener {

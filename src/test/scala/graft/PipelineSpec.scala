@@ -50,8 +50,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.sameElements(b))
   }
 
-  test("skew routing separates giant pages and lineage metrics add up") {
+  test("skew routing places giants by their own salt range and lineage metrics add up") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{hash, lit, pmod, spark_partition_id}
     val fixtures = WebCorpus.generate(80, giantEvery = 20, giantParagraphs = 200)
     val pages = spark.createDataset(fixtures.map(_.page))
     val acc = spark.sparkContext.collectionAccumulator[PartitionLineage]("lineage")
@@ -62,9 +63,29 @@ class PipelineSpec extends AnyFunSuite {
     val rows = lineage.asScala.toSeq
     assert(rows.map(_.docs).sum == 80)
     assert(rows.map(_.parse_failures).sum == 0)
-    // giant pages (4 of them) land in the dedicated tail partitions
-    val giantUrls = fixtures.filter(_.page.html.length >= (1 << 20)).map(_.page.url)
-    assert(rows.nonEmpty)
+    // the fixture's giants are ~20 KiB against ~2 KiB for the rest
+    val giantThreshold = 16 << 10
+    val giantUrls = fixtures.filter(_.page.html.length >= giantThreshold).map(_.page.url).toSet
+    assert(giantUrls == Set(19, 39, 59, 79).map(i => f"https://fixture.test/web/page$i%06d.html"))
+    // repartition(k, key) puts a row in pmod(murmur3(key), k), which
+    // `hash` computes with the same seed: a giant is placed by its key
+    // in the dedicated range above the small-page salts, every other
+    // page by its salt among numPartitions * SaltFactor keys
+    val parts = 8
+    val smallKeys = parts * ExtractPipeline.SaltFactor
+    def partitionOf(key: org.apache.spark.sql.Column) = pmod(hash(key), lit(parts))
+    val placed = ExtractPipeline.routeForSkew(pages, parts, giantThreshold)
+      .select(col("url"), spark_partition_id(),
+        partitionOf(lit(smallKeys) + pmod(hash(col("url")), lit(parts))),
+        partitionOf(pmod(hash(col("url")), lit(smallKeys))))
+      .as[(String, Int, Int, Int)].collect()
+    assert(placed.length == 80)
+    placed.foreach { case (url, pid, giantPid, smallPid) =>
+      if (giantUrls(url)) assert(pid == giantPid, s"giant $url left its salt range")
+      else assert(pid == smallPid, s"page $url left the small-page salts")
+    }
+    assert(placed.exists { case (url, _, g, s) => giantUrls(url) && g != s },
+      "sanity: the two rules must disagree on some giant for the check to discriminate")
   }
 
   test("malformed bytes do not kill the pass; parse_ok=false is reported") {
