@@ -24,7 +24,8 @@ import graft.functions._
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
+      "", "", "", "", "", "", "")
 
   private def inject(ext: SparkSessionExtensions, name: String, arity: Int,
                      usage: String)(builder: Seq[Expression] => Expression): Unit = {

@@ -837,7 +837,7 @@ object CorpusOps {
       // a table written under an older key scheme (no src_fp column)
       // is simply stale — recompute, never crash
       df.columns.contains("src_fp") && {
-        val m = df.select(max(col("src_fp"))).head
+        val m = df.select(max(col("src_fp"))).head()
         // an empty committed table carries no src_fp value; both stages
         // produce empty output iff their input was empty, so it is fresh
         // exactly when the live input is empty too (key 0)

@@ -296,8 +296,10 @@ object DedupOps {
     val edges = prs.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part).persist(sl)
 
-    def asMap(it: Iterator[(Long, Long)]): java.util.HashMap[Long, Long] = {
-      val m = new java.util.HashMap[Long, Long]()
+    // boxed values, so `get` of an absent key returns null instead of
+    // an unboxed 0
+    def asMap(it: Iterator[(Long, Long)]): java.util.HashMap[java.lang.Long, java.lang.Long] = {
+      val m = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       it.foreach(kv => m.put(kv._1, kv._2))
       m
     }
@@ -327,7 +329,14 @@ object DedupOps {
       // round's single shuffle.
       val neighborMin = edges.zipPartitions(labels) { (eIt, lIt) =>
         val lm = asMap(lIt)
-        eIt.map { case (s, t) => (t, lm.get(s).longValue()) }
+        eIt.map { case (s, t) =>
+          // every source is some edge's target (edges are symmetrized),
+          // so it has a label; a missing one is a broken invariant
+          val c = lm.get(s)
+          if (c == null)
+            throw new IllegalStateException(s"connected components: node $s has no label")
+          (t, c.longValue())
+        }
       }.reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
       val prev = labels
       labels = prev.zipPartitions(neighborMin, preservesPartitioning = true) {
@@ -392,7 +401,7 @@ object DedupOps {
     // stable (count, sum) pair over its monotone trajectory means a
     // stable edge set.
     def edgeSum(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum(hash(col("u"), col("v")).cast("long"))).head
+      val r = df.agg(count(lit(1)), sum(hash(col("u"), col("v")).cast("long"))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 

@@ -9,12 +9,14 @@ import org.apache.spark.util.CollectionAccumulator
 /** The core extraction job: `Dataset[PageRow] → Dataset[ExtractedDoc]`.
   *
   * One narrow `mapPartitions` pass — no shuffle in the hot path. Skew
-  * (heavy-tailed page sizes, north rule) is handled explicitly and
-  * BEFORE the map: a salted repartition on `hash(url)` spreads rows
-  * uniformly, and giant pages (html length above `giantThreshold`) are
-  * routed to their own partitions so one 100 MB page doesn't straggle
-  * a partition of small ones. AQE only fixes join/shuffle skew, not
-  * map-side compute skew, hence the explicit routing (SURVEY.md §4).
+  * (heavy-tailed page sizes, north rule) is handled BEFORE the map, by
+  * [[routeForSkew]]: a salted repartition on `hash(url)` spreads rows
+  * uniformly. Giant pages (html length above `giantThreshold`) take
+  * route keys outside the small pages' salt range, but all route keys
+  * are hash-partitioned together, so a giant can share its partition
+  * with other giants and with small pages. AQE only fixes join/shuffle
+  * skew, not map-side compute skew, hence the explicit routing
+  * (SURVEY.md §4).
   */
 object ExtractPipeline {
 
@@ -58,10 +60,15 @@ object ExtractPipeline {
     * including the ordinary giant-page tail).
     *
     * Pathologically giant pages (>= giantThreshold bytes — the 100 MB
-    * outliers a web crawl contains) are additionally segregated onto
-    * their own salt range so a single such row never queues behind a
-    * partition of small ones. AQE cannot do this — it rebalances
-    * shuffle sizes, not map-side compute — hence explicit (SURVEY.md §4).
+    * outliers a web crawl contains) take keys from a salt range of
+    * their own, `smallKeys + pmod(hash(url), numPartitions)`. That range
+    * does not give them partitions of their own: `repartition` hashes
+    * every route key, giant or small, into the same `numPartitions`
+    * partitions, so two giants can land together and a giant queues
+    * with whatever small salt groups hash beside it (PipelineSpec pins
+    * this placement). AQE does not rebalance map-side compute either —
+    * it rebalances shuffle sizes — hence the explicit salting
+    * (SURVEY.md §4).
     */
   final val SaltFactor = 16
 

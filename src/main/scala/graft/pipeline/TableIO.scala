@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
@@ -23,14 +23,43 @@ final class TableIO(val root: String) {
   import TableIO.Snapshot
   private val manifestPath = Paths.get(root, "manifest.json")
 
-  /** Base64 of the READ-BACK schema json of a just-written snapshot —
-    * the exact schema inference would produce for those files, recorded
-    * in the manifest so [[readTable]] can skip the per-relation
-    * inference job (schema evolution across snapshots falls back).
+  /** Base64 of the schema json that parquet inference reports for the
+    * files written from `df`: its schema made nullable all the way down,
+    * as Spark's file sources resolve every relation. Recorded in the
+    * manifest so [[readTable]] can skip the per-relation inference job
+    * (schema evolution across snapshots falls back).
     */
-  private def schema64Of(written: DataFrame): String =
+  private def schema64Of(df: DataFrame): String =
     java.util.Base64.getEncoder.encodeToString(
-      written.schema.json.getBytes(StandardCharsets.UTF_8))
+      GraftSqlBridge.asNullable(df.schema).json.getBytes(StandardCharsets.UTF_8))
+
+  /** Write `df` into the freshly reserved snapshot dir and describe it,
+    * with no second pass over the written files.
+    *
+    * Append, NOT Overwrite: Overwrite DELETES the target first, and the
+    * reserved dir IS the reservation marker — destroying it mid-write
+    * opens a window where a concurrent writer's nextId() no longer sees
+    * the claim, re-reserves the same id, and the two writers clobber
+    * each other's _temporary staging (observed as a chmod-on-missing-
+    * path task failure). reserveDir guarantees the dir was just created
+    * empty, so Append lands exactly this write's files.
+    *
+    * `rows` is observed on the write itself: `observe` puts a
+    * `CollectMetricsExec` on top of `df`, i.e. in the write job's result
+    * stage, and its counts travel as an accumulator. Spark's
+    * `DAGScheduler.handleTaskCompletion` merges a result task's
+    * accumulator updates only while `!job.finished(outputId)`, so each
+    * partition is counted once however often its task is retried or
+    * speculated; a failed attempt's count is dropped, because the
+    * accumulator registers with the default `countFailedValues = false`.
+    * A zero-partition `df` runs no metric task and observes 0.
+    */
+  private def writeSnapshot(df: DataFrame, id: Long, dir: String): Snapshot = {
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Append).parquet(s"$root/$dir")
+    Snapshot(id, dir, written.get("rows").asInstanceOf[Long], schema64Of(df))
+  }
 
   /** One manifest line; `schema64` is last so the fixed-order regex
     * parse of the leading fields is unaffected (legacy lines simply
@@ -173,7 +202,7 @@ final class TableIO(val root: String) {
         val snaps = snapshots()
         if (snaps.isEmpty) None
         else {
-          // commits record the written files' read-back schema in the
+          // commits record the written files' inferred schema in the
           // manifest (Iceberg-style table metadata, guide §6): when
           // every visible snapshot agrees on it, the read skips parquet
           // schema inference — which costs a Spark job per relation
@@ -197,56 +226,22 @@ final class TableIO(val root: String) {
     }
   }
 
-  /** Append `df` as a new snapshot; manifest write is atomic (tmp +
-    * move) so a crash mid-commit leaves the previous snapshot intact.
+  /** Append `df` as a new snapshot in one write job: the manifest
+    * records the row count observed by that write and the schema
+    * inference would report, so nothing is read back. The manifest
+    * write is atomic (tmp + move) so a crash mid-commit leaves the
+    * previous snapshot intact.
     */
   def appendSnapshot(df: DataFrame): Snapshot = {
     val base = manifestBase()
     val prev = snapshots()
     val id = nextId()
-    val dir = reserveDir(id)
-    // Append, NOT Overwrite: Overwrite DELETES the target first, and the
-    // reserved dir IS the reservation marker — destroying it mid-write
-    // opens a window where a concurrent writer's nextId() no longer sees
-    // the claim, re-reserves the same id, and the two writers clobber
-    // each other's _temporary staging (observed as a chmod-on-missing-
-    // path task failure). reserveDir guarantees the dir was just created
-    // empty, so Append lands exactly this write's files.
-    df.write.mode(SaveMode.Append).parquet(s"$root/$dir")
-    val written = df.sparkSession.read.parquet(s"$root/$dir")
-    val rows = written.count()
-    val snap = Snapshot(id, dir, rows, schema64Of(written))
+    val snap = writeSnapshot(df, id, reserveDir(id))
     val all = (prev :+ snap).map(manifestLine).mkString("", "\n", "\n")
     commitManifest(all, id, base)
     snap
   }
 
-  /** Input rows not yet present in the committed table, by key column.
-    *
-    * Two-phase shape so no payload column ever crosses an exchange: the
-    * anti-join runs over keys alone (both scans prune to the key
-    * column), and the input's full rows re-join by a semi join against
-    * the surviving pending keys — broadcastable on an incremental
-    * resume, so wide columns (page html, document text) stay in their
-    * scan. A single anti-join of the FULL input against the committed
-    * keys degrades to a sort-merge join once the committed side
-    * outgrows the broadcast threshold on a mature table, shuffling
-    * every payload byte to discover most rows are already done
-    * (PlanSpec pins the pruned shape). Null-key rows can never be
-    * committed and are always pending (a bare semi join would silently
-    * drop them where the old anti-join kept them) — they ride the same
-    * payload pass as a left-join non-match rather than a second scan.
-    *
-    * `input` is referenced twice (the keys branch and the payload
-    * branch), which is free when Catalyst can column-prune it to the
-    * key (any relational source: parquet, committed tables). An input
-    * that Catalyst canNOT prune through — a typed `.map` synthesizing
-    * rows — is computed in full in BOTH branches; for those, resolve
-    * pending keys over a cheap key-only projection first and build
-    * payload rows only for survivors (the
-    * [[graft.ops.CorpusOps.corpusEndToEnd]] stage-E shape, via
-    * [[graft.ops.ExtractOps.docUrlCol]]).
-    */
   /** True iff [[pending]] over `input` has any row — answered from a
     * KEYS-ONLY anti-join (both scans prune to the key column), never
     * re-attaching the payload: the no-op resume's common probe carries
@@ -269,17 +264,45 @@ final class TableIO(val root: String) {
           .isEmpty
     }
 
+  /** Input rows not yet present in the committed table, by key column.
+    *
+    * Two-phase shape so no payload column ever crosses an exchange: the
+    * anti-join runs over keys alone (both scans prune to the key
+    * column), and the input's full rows re-join by a semi join against
+    * the surviving pending keys. At resume scale both joins broadcast
+    * their key-only side, so wide columns (page html, document text)
+    * stay in their scan and nothing is shuffled. A single anti-join of
+    * the FULL input against the committed keys degrades to a
+    * sort-merge join once the committed side outgrows the broadcast
+    * threshold on a mature table, shuffling every payload byte to
+    * discover most rows are already done (PlanSpec pins the pruned
+    * shape).
+    *
+    * Neither side is deduplicated: an anti join's result does not
+    * depend on duplicates on either side, and a semi join emits each
+    * input row at most once however many pending keys match it. Null
+    * keys can never be committed and are always pending: a null key
+    * matches nothing, so it survives the anti join, and the null-safe
+    * `<=>` of the semi join matches it back to its input rows.
+    *
+    * `input` is referenced twice (the keys branch and the payload
+    * branch), which is free when Catalyst can column-prune it to the
+    * key (any relational source: parquet, committed tables). An input
+    * that Catalyst canNOT prune through — a typed `.map` synthesizing
+    * rows — is computed in full in BOTH branches; for those, resolve
+    * pending keys over a cheap key-only projection first and build
+    * payload rows only for survivors (the
+    * [[graft.ops.CorpusOps.corpusEndToEnd]] stage-E shape, via
+    * [[graft.ops.ExtractOps.docUrlCol]]).
+    */
   def pending(input: DataFrame, keyCol: String): DataFrame =
     readTable(input.sparkSession) match {
       case None => input
       case Some(committed) =>
-        val pendingKeys = input.select(col(keyCol)).where(col(keyCol).isNotNull)
-          .distinct()
-          .join(committed.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-          .withColumn("__graft_pending", lit(true))
-        input.join(pendingKeys, Seq(keyCol), "left")
-          .where(col("__graft_pending").isNotNull || col(keyCol).isNull)
-          .select(input.columns.map(col): _*)
+        val pendingKeys = input.select(col(keyCol))
+          .join(committed.select(col(keyCol)), Seq(keyCol), "left_anti")
+          .select(col(keyCol).as("__graft_pending"))
+        input.join(pendingKeys, col(keyCol) <=> col("__graft_pending"), "left_semi")
     }
 
   /** `MERGE INTO`-shaped upsert (Iceberg's idempotent-sink analog, the
@@ -294,7 +317,7 @@ final class TableIO(val root: String) {
       case None => updates
       case Some(committed) =>
         val survivors = committed.join(
-          updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+          updates.select(col(keyCol)), Seq(keyCol), "left_anti")
         survivors.unionByName(updates)
     }
     replaceWith(merged)
@@ -307,14 +330,9 @@ final class TableIO(val root: String) {
   def replaceWith(df: DataFrame): Snapshot = {
     val base = manifestBase()
     val id = nextId()
-    val dir = reserveDir(id)
     // materialize BEFORE truncating the manifest: df may read prior
-    // snapshots. Append, not Overwrite — see appendSnapshot: the
-    // reserved dir is the reservation marker and must never be deleted.
-    df.write.mode(SaveMode.Append).parquet(s"$root/$dir")
-    val written = df.sparkSession.read.parquet(s"$root/$dir")
-    val rows = written.count()
-    val snap = Snapshot(id, dir, rows, schema64Of(written))
+    // snapshots
+    val snap = writeSnapshot(df, id, reserveDir(id))
     commitManifest(manifestLine(snap) + "\n", id, base)
     snap
   }
@@ -372,8 +390,10 @@ object TableIO {
 
   /** Resumable run: extract + commit only pages whose url is not yet in
     * the output table. Returns the number of newly committed rows.
-    * [[TableIO.pending]]'s two-phase shape keeps page bodies out of the
-    * anti-join exchanges.
+    * [[TableIO.pending]] finds the pending urls with two key-only
+    * broadcasts, so page bodies cross only the routing shuffle, and
+    * [[TableIO.appendSnapshot]] commits from the write's own observed
+    * row count: one write job plus the two broadcasts, nothing else.
     */
   def resumeExtract(io: TableIO, pages: Dataset[PageRow], charset: String = "utf-8",
                     numPartitions: Int = 0): Long = {

@@ -196,7 +196,7 @@ object StreamingExtract {
     */
   def bandKeysOfSigs(sigs: Array[String]): Seq[String] =
     sigs.grouped(graft.ops.DedupOps.BandSize).zipWithIndex.map { case (g, b) =>
-      b + ":" + org.apache.commons.codec.digest.DigestUtils.md5Hex(g.mkString("|"))
+      s"$b:${org.apache.commons.codec.digest.DigestUtils.md5Hex(g.mkString("|"))}"
     }.toSeq
 
   /** MinHash band keys of a text — the SAME banding as the batch LSH

@@ -424,6 +424,95 @@ class PipelineSpec extends AnyFunSuite {
       Map("u1" -> 1, "u3" -> 3))
   }
 
+  test("every TableIO commit path records the read-back row count and schema") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // an array<struct<…>> column and non-nullable primitives: the
+    // recorded schema must be made nullable all the way down
+    val schema = StructType(Seq(
+      StructField("key", StringType, nullable = false),
+      StructField("n", IntegerType, nullable = false),
+      StructField("spans", ArrayType(StructType(Seq(
+        StructField("from", LongType, nullable = false),
+        StructField("label", StringType))), containsNull = false), nullable = false)))
+    def rowsOf(keys: Seq[String]): Seq[Row] = keys.zipWithIndex.map { case (k, i) =>
+      Row(k, i, Seq.tabulate(i % 3)(j => Row(j.toLong, if (j == 1) null else s"$k/$j")))
+    }
+    def frame(partitions: Int, keys: String*): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(rowsOf(keys), partitions), schema)
+    val root = java.nio.file.Files.createTempDirectory("graft-commit").toString
+    val io = new TableIO(root)
+    def commit(what: String)(run: => TableIO.Snapshot): Long = {
+      // a commit stuck waiting for its observation fails here instead of
+      // hanging the suite
+      val snap = Await.result(Future(run), 120.seconds)
+      val back = spark.read.parquet(s"$root/${snap.dir}")
+      assert(snap.rows == back.count(), s"$what: manifest rows vs read-back count")
+      val recorded = new String(java.util.Base64.getDecoder.decode(snap.schema64),
+        java.nio.charset.StandardCharsets.UTF_8)
+      assert(recorded == back.schema.json, s"$what: manifest schema vs inferred schema")
+      assert(io.snapshots().last == snap, s"$what: the manifest must record the snapshot")
+      snap.rows
+    }
+    assert(commit("append")(io.appendSnapshot(frame(3, "a", "b", "c", "d"))) == 4)
+    val zeroPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    assert(zeroPartitions.queryExecution.toRdd.getNumPartitions == 0)
+    assert(commit("zero-partition append")(io.appendSnapshot(zeroPartitions)) == 0)
+    val oneEmptyPartition = frame(1)
+    assert(oneEmptyPartition.queryExecution.toRdd.getNumPartitions == 1)
+    assert(commit("one-empty-partition append")(io.appendSnapshot(oneEmptyPartition)) == 0)
+    assert(commit("mergeByKey")(io.mergeByKey(frame(2, "c", "e"), "key")) == 5)
+    assert(commit("deleteByKeys")(io.deleteByKeys(spark, "key", Seq("a")).get) == 4)
+    assert(commit("append after delete")(io.appendSnapshot(frame(2, "f", "g"))) == 2)
+    assert(commit("compact")(io.compact(spark).get) == 6)
+    assert(commit("replaceWith")(io.replaceWith(frame(4, "x", "y", "z"))) == 3)
+    assert(io.readTable(spark).get.count() == 3)
+  }
+
+  test("pending: duplicate, null and multiply committed keys match the distinct/left-join rule") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.lit
+    // the formulation pending() replaced: deduplicated keys, a left join
+    // with a marker column, and null keys let through by an isNull filter
+    def oracle(input: DataFrame, committed: DataFrame): DataFrame = {
+      val pendingKeys = input.select(col("key")).where(col("key").isNotNull).distinct()
+        .join(committed.select(col("key")).distinct(), Seq("key"), "left_anti")
+        .withColumn("__pending", lit(true))
+      input.join(pendingKeys, Seq("key"), "left")
+        .where(col("__pending").isNotNull || col("key").isNull)
+        .select(col("key"), col("v"))
+    }
+    def rows(df: DataFrame): Seq[(Option[String], Int)] =
+      df.select("key", "v").as[(Option[String], Int)].collect().toSeq.sortBy(r => (r._1.toString, r._2))
+    // (case, input keys, committed snapshots, expected pending keys)
+    val cases: Seq[(String, Seq[Option[String]], Seq[Seq[String]], Seq[Option[String]])] = Seq(
+      ("duplicate input keys", Seq(Some("a"), Some("b"), Some("c"), Some("c")),
+        Seq(Seq("a")), Seq(Some("b"), Some("c"), Some("c"))),
+      ("null input keys", Seq(Some("a"), None, None, Some("d")),
+        Seq(Seq("a", "b")), Seq(None, None, Some("d"))),
+      ("key committed in two snapshots", Seq(Some("a"), Some("b"), Some("c"), Some("d")),
+        Seq(Seq("a", "b"), Seq("b", "c")), Seq(Some("d"))),
+      ("key committed twice in one snapshot", Seq(Some("a"), Some("b"), Some("b"), None),
+        Seq(Seq("b", "b")), Seq(Some("a"), None)),
+      ("all of them", Seq(Some("a"), Some("b"), Some("c"), Some("c"), None, None, Some("d")),
+        Seq(Seq("a", "b", "b"), Seq("b")), Seq(Some("c"), Some("c"), None, None, Some("d"))),
+      ("everything committed", Seq(Some("a"), Some("a")), Seq(Seq("a")), Nil))
+    cases.foreach { case (name, keys, snaps, expected) =>
+      val io = new TableIO(java.nio.file.Files.createTempDirectory("graft-pending").toString)
+      snaps.zipWithIndex.foreach { case (ks, s) =>
+        io.appendSnapshot(ks.zipWithIndex.map { case (k, i) => (k, -100 * (s + 1) - i) }.toDF("key", "v"))
+      }
+      val input = keys.zipWithIndex.toDF("key", "v").repartition(3)
+      val got = rows(io.pending(input, "key"))
+      assert(got == rows(oracle(input, io.readTable(spark).get)), s"$name: pending vs the old rule")
+      assert(got.map(_._1).sortBy(_.toString) == expected.sortBy(_.toString), s"$name: pending keys")
+    }
+  }
+
   test("entry flagship returns rows on sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -164,6 +164,7 @@ class PlanSpec extends AnyFunSuite {
     graft.pipeline.TableIO.resumeExtract(io, pages.filter(_.url.hashCode % 4 != 0))
     // pending() is two-phase: urls-only anti-join, html re-joined by semi
     val todo = io.pending(pages.toDF(), "url")
+    val plan = todo.queryExecution.executedPlan.toString
     // the AQE wrapper is childless until run, so walk the printed tree:
     // every Exchange's subtree (lines indented deeper than it) must be
     // url-only — a page-body (html) scan below an exchange means page
@@ -171,7 +172,7 @@ class PlanSpec extends AnyFunSuite {
     // Depth = tree-art prefix length ("+- "/":- " plus "   "/":  "
     // continuations), NOT first-letter index: a codegen "*(3) " prefix
     // or a letterless line would make first-letter depth lie.
-    val lines = todo.queryExecution.executedPlan.toString.split("\n")
+    val lines = plan.split("\n")
     def indent(l: String): Int = "^[ :+-]*".r.findFirstIn(l).getOrElse("").length
     val exchangeIdx = lines.indices.filter(i => lines(i).contains("Exchange"))
     assert(exchangeIdx.nonEmpty, "expected the pending-url exchanges to exist")
@@ -184,6 +185,18 @@ class PlanSpec extends AnyFunSuite {
           s"page-body scan below an exchange in the resume pending plan:\n${lines(j)}")
         j += 1
       }
+    }
+    // at this scale both joins broadcast their key side: no shuffle at
+    // all, and each broadcast (the committed urls, then the pending
+    // urls) scans the url column alone
+    assert(!plan.contains("Exchange hashpartitioning"), s"pending must not shuffle:\n$plan")
+    val broadcasts = exchangeIdx.filter(i => lines(i).contains("BroadcastExchange"))
+    assert(broadcasts.size == 2, s"expected two broadcasts:\n$plan")
+    broadcasts.foreach { i =>
+      val below = lines.drop(i + 1).takeWhile(l => indent(l) > indent(lines(i)))
+      val scans = below.filter(_.contains("FileScan"))
+      assert(scans.nonEmpty && scans.forall(_.contains("ReadSchema: struct<url:string>")),
+        s"broadcast subtree must read only the url column:\n${(lines(i) +: below).mkString("\n")}")
     }
   }
 

@@ -832,7 +832,7 @@ class StreamingAndOpsSpec extends AnyFunSuite {
     val byId = vecs.toMap
     val stride = math.max(1L, vecs.length / 16L)
     var cents: Seq[(Long, Array[Double])] =
-      vecs.filter(_._1 % stride == 0).map { case (id, v) => id -> v }
+      vecs.filter(_._1 % stride == 0).map { case (id, v) => id -> v }.toIndexedSeq
     def assign(): Array[(Long, Long, Double)] = {
       val cn = cents.map { case (cid, cv) => (cid, cv, math.sqrt(dot(cv, cv))) }
       vecs.map { case (id, v) =>

@@ -66,10 +66,10 @@ class VectorExprSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
     assert(df.select(graft.functions.VectorFunctions.vec_dot(col("a"), col("b")))
-      .head.getDouble(0) == 11.0)
+      .head().getDouble(0) == 11.0)
     val withNull = df.select(
       graft.functions.VectorFunctions.vec_dot(lit(null).cast("array<double>"), col("b")))
-    assert(withNull.head.isNullAt(0))
+    assert(withNull.head().isNullAt(0))
   }
 
   test("VecDot NULL semantics match the HOF form: null element and length mismatch") {
@@ -83,7 +83,7 @@ class VectorExprSpec extends AnyFunSuite {
       graft.functions.VectorFunctions.vec_dot(col(a), col(b))
     val r = df.select(
       hof("ne", "full"), native("ne", "full"),
-      hof("short", "full"), native("short", "full")).head
+      hof("short", "full"), native("short", "full")).head()
     assert(r.isNullAt(0) && r.isNullAt(1), "null element -> NULL on both")
     assert(r.isNullAt(2) && r.isNullAt(3), "length mismatch -> NULL on both")
   }
